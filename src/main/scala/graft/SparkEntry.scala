@@ -37,7 +37,17 @@ object SparkEntry {
     val fmt = graft.operators.AnnIndex.FormatVersion
     val digest = java.lang.Long.toHexString(
       graft.functions.Hashing.xxhash64(s"$dataDir#$variant#v$fmt#$sig"))
-    s"/tmp/graft_ann_${variant}_$digest"
+    annRoot.resolve(s"${variant}_$digest").toString
+  }
+
+  /** Per-JVM root of the persisted ANN indexes under `java.io.tmpdir`,
+    * deleted on exit: every process builds its indexes once, so whether a
+    * query builds or only probes never depends on an earlier process. */
+  private lazy val annRoot: java.nio.file.Path = {
+    val r = java.nio.file.Files.createTempDirectory("graft_ann_")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      org.apache.commons.io.FileUtils.deleteQuietly(r.toFile): Unit))
+    r
   }
 
   /** Rank a <=k-row ordered top-k result 1..k. k rows: materializing on the

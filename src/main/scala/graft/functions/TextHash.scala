@@ -91,6 +91,12 @@ case class Fingerprint(child: Expression)
 object TextHash {
   final val P = 1000000007L
 
+  /** Payload bits of the continuation byte at `j`, or 0 past the end of the
+    * array: malformed input (a multi-byte sequence cut short by the end of
+    * the text) must fold to some value, never read out of bounds. */
+  @inline private def cont(bytes: Array[Byte], j: Int): Int =
+    if (j < bytes.length) bytes(j) & 0x3F else 0
+
   /** One-pass distinct word-k-gram hashes over the UTF-8 bytes (static so
     * generated code calls it directly; see [[ShingleHashes]] for the
     * value contract). */
@@ -114,14 +120,15 @@ object TextHash {
         var cp = 0
         if (b0 < 0x80) { cp = b0; i += 1 }
         else if (b0 < 0xE0) { // 2-byte
-          cp = ((b0 & 0x1F) << 6) | (bytes(i + 1) & 0x3F); i += 2
+          cp = ((b0 & 0x1F) << 6) | cont(bytes, i + 1); i += 2
         } else if (b0 < 0xF0) { // 3-byte
-          cp = ((b0 & 0x0F) << 12) | ((bytes(i + 1) & 0x3F) << 6) |
-            (bytes(i + 2) & 0x3F); i += 3
-        } else { // 4-byte
-          cp = ((b0 & 0x07) << 18) | ((bytes(i + 1) & 0x3F) << 12) |
-            ((bytes(i + 2) & 0x3F) << 6) | (bytes(i + 3) & 0x3F); i += 4
+          cp = ((b0 & 0x0F) << 12) | (cont(bytes, i + 1) << 6) |
+            cont(bytes, i + 2); i += 3
+        } else { // 4-byte (0xF8-0xFF are invalid leads; read as 4-byte)
+          cp = ((b0 & 0x07) << 18) | (cont(bytes, i + 1) << 12) |
+            (cont(bytes, i + 2) << 6) | cont(bytes, i + 3); i += 4
         }
+        if (i > n) i = n // a sequence cut short by the end still ends the word
         h = (h * 31 + cp) % P
       }
     }
@@ -160,14 +167,15 @@ object TextHash {
         var cp = 0
         if (b0 < 0x80) { cp = b0; i += 1 }
         else if (b0 < 0xE0) {
-          cp = ((b0 & 0x1F) << 6) | (bytes(i + 1) & 0x3F); i += 2
+          cp = ((b0 & 0x1F) << 6) | cont(bytes, i + 1); i += 2
         } else if (b0 < 0xF0) {
-          cp = ((b0 & 0x0F) << 12) | ((bytes(i + 1) & 0x3F) << 6) |
-            (bytes(i + 2) & 0x3F); i += 3
+          cp = ((b0 & 0x0F) << 12) | (cont(bytes, i + 1) << 6) |
+            cont(bytes, i + 2); i += 3
         } else {
-          cp = ((b0 & 0x07) << 18) | ((bytes(i + 1) & 0x3F) << 12) |
-            ((bytes(i + 2) & 0x3F) << 6) | (bytes(i + 3) & 0x3F); i += 4
+          cp = ((b0 & 0x07) << 18) | (cont(bytes, i + 1) << 12) |
+            (cont(bytes, i + 2) << 6) | cont(bytes, i + 3); i += 4
         }
+        if (i > n) i = n
         h = (h * 31 + cp) % P
       }
     }

@@ -152,8 +152,14 @@ final class CrawlDriver(spark: SparkSession, cfg: CrawlConfig, val workDir: Stri
   }
 
   /** Run (or resume) the crawl. Returns per-round metrics. Seeds are a
-    * DataFrame with one `url` column (≙ S1: spark.read.textFile(seeds)). */
-  def run(seedUrls: DataFrame, maxRounds: Int, maxUrls: Long): Seq[RoundMetrics] = {
+    * DataFrame with one `url` column (≙ S1: spark.read.textFile(seeds)).
+    * On return this JVM's cached prefilter buckets are released; the
+    * durable bucket files stay for a resume. */
+  def run(seedUrls: DataFrame, maxRounds: Int, maxUrls: Long): Seq[RoundMetrics] =
+    try runRounds(seedUrls, maxRounds, maxUrls)
+    finally prefilterStore.release()
+
+  private def runRounds(seedUrls: DataFrame, maxRounds: Int, maxUrls: Long): Seq[RoundMetrics] = {
     // the loop thread's own actions ARE the critical path (inert under FIFO)
     spark.sparkContext.setLocalProperty("spark.scheduler.pool", "critical")
     val corpus = corpusWithIdx()

@@ -117,7 +117,7 @@ final case class CrawlConfig(
     bloomPrefilter: Boolean = true,
     bloomFpp: Double = 0.01,
     prefilterBuckets: Int = 64,          // partitioned cuckoo store: K bucket files
-    prefilterKeysPerBucket: Long = 1L << 21, // per-bucket capacity (~4 MB files)
+    prefilterKeysPerBucket: Long = 1L << 21, // per-bucket key ceiling (files grow ~2.1 B/key)
     prefilterMinSeen: Long = 500000L,    // engage the prefilter above this seen size
     pruneColdBuckets: Boolean = true, // dequeue reads only buckets with an eligible host
     // fetch/verify-stage salt: split each politeness bucket's fetch batch

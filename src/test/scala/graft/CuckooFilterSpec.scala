@@ -35,4 +35,24 @@ class CuckooFilterSpec extends AnyFunSuite {
     assert(f.overflowed)
     assert(f.mightContain(123456789L)) // fail-safe answer
   }
+
+  test("tryAdd on a full filter leaves every resident key in place") {
+    val f = new CuckooFilter(16) // tiny: 64 slots
+    val rnd = new scala.util.Random(5)
+    val placed = (0 until 1000).map(_ => rnd.nextLong()).filter(f.tryAdd)
+    assert(placed.size <= 64) // the rest found no slot
+    assert(!f.overflowed)
+    placed.foreach(k => assert(f.mightContain(k), "failed kick walk lost a key"))
+    assert(f.size == placed.size)
+  }
+
+  test("a truncated record is an IOException, not a zero-filled table") {
+    val f = CuckooFilter.forCapacity(1000)
+    (0 until 500).foreach(i => f.add(i.toLong))
+    val bytes = CuckooFilter.toBytes(f)
+    assert(CuckooFilter.fromBytes(bytes).size == f.size)
+    intercept[java.io.IOException](CuckooFilter.fromBytes(bytes.dropRight(1)))
+    intercept[java.io.IOException](CuckooFilter.fromBytes(bytes.take(3)))
+    intercept[java.io.IOException](CuckooFilter.fromBytes(bytes :+ 0.toByte))
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.PrefilterStore
+import graft.operators.{CuckooFilter, PrefilterStore}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
@@ -111,5 +111,84 @@ class PrefilterStoreSpec extends AnyFunSuite {
     val (p1, s1) = crawl(base.copy(prefilterMinSeen = 0L))     // filter always on
     val (p2, s2) = crawl(base.copy(bloomPrefilter = false))    // filter never on
     assert(p1 == p2 && s1 == s2, "prefilter changed crawl results")
+  }
+
+  test("bucket chains grow with their keys: no false negatives, ~2-4 B per key") {
+    val dir = TestSpark.tempDir("prefilter_grow")
+    val store = new PrefilterStore(dir, numBuckets = 4, capacityPerBucket = 1L << 21)
+    def keys(from: Long, to: Long) =
+      spark.range(from, to).select(xxhash64(col("id")).as("url_hash"))
+    val n = 200000L
+    (0 until 5).foreach(i => store.addDelta(keys(i * n / 5, (i + 1) * n / 5)))
+    assert(keys(0, n).filter(!store.predicate(spark)).count() == 0, "false negatives")
+    val fp = keys(n, n + 1000000L).filter(store.predicate(spark)).count()
+    assert(fp < 5000, s"fp rate ${fp / 10000.0}% too high") // < 0.5%
+    val perBucket = keys(0, n).groupBy(pmod(col("url_hash"), lit(4L)).as("b")).count()
+      .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+    val newest = Files.list(Paths.get(dir)).iterator().asScala
+      .map(_.getFileName.toString).collect { case f if f.endsWith(".cf") =>
+        val Array(b, v) = f.stripPrefix("b").stripSuffix(".cf").split("_v")
+        (b.toInt, v.toLong, f)
+      }.toSeq.groupBy(_._1).map { case (b, vs) => b -> vs.maxBy(_._2)._3 }
+    assert(newest.size == 4)
+    newest.foreach { case (b, f) =>
+      val bytesPerKey = Files.size(Paths.get(dir, f)).toDouble / perBucket(b)
+      assert(bytesPerKey <= 6.0, s"bucket $b: $bytesPerKey B/key")
+    }
+    store.release()
+  }
+
+  test("a finished crawl releases its cached filters") {
+    val cfg = CrawlConfig(numHosts = 24, pagesPerHost = 32, outDegree = 6,
+      corpusSize = 64, imageSize = 16, numBuckets = 8,
+      keepAliveBatch = 3, maxUrlsPerHost = 40,
+      brokenHostFraction = 0.1, prefilterMinSeen = 0L)
+    val web = new graft.sources.SynthWeb(cfg)
+    // stores built directly by earlier tests are never released; start clean
+    PrefilterStore.clearCache()
+    (0 until 3).foreach { _ =>
+      val workDir = TestSpark.tempDir("pf_release")
+      new graft.plans.CrawlDriver(spark, cfg, workDir)
+        .run(web.seeds(4), maxRounds = 2, maxUrls = Long.MaxValue)
+      assert(PrefilterStore.cachedBytes(Paths.get(workDir, "prefilter").toString) == 0)
+      assert(PrefilterStore.cachedBytes < (1L << 20),
+        s"${PrefilterStore.cachedBytes} B of filters cached after the crawl returned")
+    }
+  }
+
+  test("a single-record bucket file loads as a one-link chain and grows from it") {
+    val dir = TestSpark.tempDir("prefilter_oldfmt")
+    def keys(from: Long, to: Long) =
+      spark.range(from, to).select(xxhash64(col("id")).as("url_hash"))
+    val old = CuckooFilter.forCapacity(1000) // 512 buckets, 1,945 keys at 95%
+    keys(0, 1500).collect().foreach(r => old.add(r.getLong(0)))
+    Files.write(Paths.get(dir, "b0_v0.cf"), CuckooFilter.toBytes(old))
+    val store = new PrefilterStore(dir, numBuckets = 1, capacityPerBucket = 1L << 21)
+    assert(keys(0, 1500).filter(!store.predicate(spark)).count() == 0)
+    store.addDelta(keys(1500, 3000))
+    assert(keys(0, 3000).filter(!store.predicate(spark)).count() == 0)
+    // the old record stays the first link; a second link of twice its size follows
+    assert(Files.size(Paths.get(dir, "b0_v1.cf")) == (5 + 512 * 8) + (5 + 1024 * 8))
+    store.release()
+  }
+
+  test("a bucket file cut by one byte answers maybe for every key") {
+    val dir = TestSpark.tempDir("prefilter_cut")
+    val store = new PrefilterStore(dir, numBuckets = 2, capacityPerBucket = 4096)
+    def keys(from: Long, to: Long) =
+      spark.range(from, to).select(xxhash64(col("id")).as("url_hash"))
+    store.addDelta(keys(0, 1000))
+    Files.list(Paths.get(dir)).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".cf")).toSeq
+      .foreach { f =>
+        val b = Files.readAllBytes(f)
+        Files.write(f, java.util.Arrays.copyOf(b, b.length - 1))
+      }
+    PrefilterStore.clearCache() // simulate a fresh executor
+    assert(keys(0, 1000).filter(store.predicate(spark)).count() == 1000)
+    assert(keys(5000, 6000).filter(store.predicate(spark)).count() == 1000)
+    store.addDelta(keys(1000, 2000)) // an update over a cut file degrades too
+    assert(keys(0, 2000).filter(store.predicate(spark)).count() == 2000)
+    store.release()
   }
 }
