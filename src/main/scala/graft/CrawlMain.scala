@@ -77,7 +77,8 @@ object CrawlMain {
     metrics.foreach { m =>
       println(s"""{"round":${m.round},"dequeued":${m.dequeued},"fetched_ok":${m.fetched_ok},""" +
         s""""fetch_errors":${m.fetch_errors},"links_admitted":${m.links_admitted},""" +
-        s""""hosts_new":${m.hosts_new},"wall_ms":${m.wall_ms}}""")
+        s""""hosts_new":${m.hosts_new},"wall_ms":${m.wall_ms},""" +
+        s""""codegen_classes":${m.codegen_classes}}""")
     }
     val urls = metrics.map(_.dequeued).sum
     import scala.jdk.CollectionConverters._

@@ -234,8 +234,10 @@ object SparkEntry {
     },
 
     // frontier expansion (3-round BFS with per-round sieve, ≙ CrawlRound).
-    // r6: each round's frontier is localCheckpoint'd — exactly what the real
-    // engine does between rounds (CrawlRound.stateCk). Without the cut, the
+    // r6: each round's frontier is materialized (Dedup.materialize: a
+    // reliable checkpoint when the session has a checkpoint dir, else a
+    // local one — what the engine does between rounds, CrawlRound.stateCk,
+    // without losing recoverability on a cluster). Without the cut, the
     // loop's lazy lineage re-derived every prior round inside each anti-join
     // side: the r5 plan carried FIFTY Exchange nodes; checkpointing leaves
     // one distinct + one anti-join per round, and AQE picks the join
@@ -243,17 +245,15 @@ object SparkEntry {
     "q_bfs_frontier" -> { (s, d) =>
       val docs = t(s, d, "documents")
       val n = docs.count()
-      var frontier = docs.filter(col("doc_id") < 5)
-        .select(col("doc_id").as("id")).withColumn("r", lit(0L))
-        .localCheckpoint()
+      var frontier = Dedup.materialize(docs.filter(col("doc_id") < 5)
+        .select(col("doc_id").as("id")).withColumn("r", lit(0L)))
       var seenAll = frontier
       for (r <- 1 to 3) {
-        val next = frontier
+        val next = Dedup.materialize(frontier
           .select(explode(array((1 to 3).map(j => (col("id") * 7 + j) % n): _*)).as("id"))
           .distinct()
           .join(seenAll.select("id"), Seq("id"), "left_anti")
-          .withColumn("r", lit(r.toLong))
-          .localCheckpoint()
+          .withColumn("r", lit(r.toLong)))
         seenAll = seenAll.unionByName(next)
         frontier = next
       }

@@ -437,9 +437,9 @@ object Dedup {
     * when the result plan dies). NOTE (ADVICE r5): reliable checkpoint data
     * is only auto-deleted when the session sets
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` — the engine's
-    * own session builders (CrawlMain, CorpusBench, BenchExtra, tests) set
+    * own session builders (CrawlMain, BenchExtra, tests) set
     * it; sessions that don't should clean their checkpoint dir themselves. */
-  private def materialize(df: DataFrame): DataFrame =
+  private[graft] def materialize(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint()
 

@@ -11,11 +11,13 @@ import org.apache.spark.sql.functions._
   * `workers/fetching_thread.clj:46-132` and would slot in as a `mapPartitions`
   * stage behind the same column contract).
   *
-  * Everything here is built-in Catalyst expressions (whole-stage codegen):
-  * status simulation via `xxhash64`, payload lookup via an equi-join on the
-  * corpus index. The corpus side is broadcast when small; at 100 TB corpus
-  * scale the same plan degrades gracefully to a shuffle join on `pick`, which
-  * AQE can re-plan.
+  * Everything here is built-in Catalyst expressions: status simulation via
+  * `xxhash64`, payload lookup via an equi-join on the corpus index. The
+  * crawl driver's session runs them interpreted while the crawl is small
+  * and compiled above its size cut (see [[graft.plans.CrawlDriver]]); both
+  * give the same rows. The corpus side is broadcast when small; at 100 TB
+  * corpus scale the same plan degrades gracefully to a shuffle join on
+  * `pick`, which AQE can re-plan.
   */
 object Fetch {
 

@@ -23,9 +23,35 @@ import scala.concurrent.ExecutionContext.Implicits.global
   * reproduces it bit-identically because each round is a pure function of
   * (committed state, round index, config). Every K rounds the in-memory
   * state re-anchors to the committed Parquet (bounds plan depth and memory).
+  *
+  * Own session, interpreted below a size cut: the driver runs every plan on
+  * `spark.newSession()`, which starts from a copy of the caller's modifiable
+  * SQL settings (shuffle partitions, AQE, time zone); the caller's conf is
+  * never touched. A round is ~80 short jobs whose plans bake round-varying
+  * literals (round index, tick, keep-alive batch), so with code generation
+  * on it compiles ~160-210 fresh Janino classes every round, on the thread
+  * that plans each job — compile time a small round never earns back
+  * (Kohn, Leis & Neumann, "Adaptive Execution of Compiled Queries", ICDE
+  * 2018). Before the bootstrap and before each round the driver therefore
+  * sets `spark.sql.codegen.factoryMode` on its session: `NO_CODEGEN` while
+  * the committed seen total (which bounds the frontier and every state
+  * table a round reads) is below `interpretBelowSeen`, Spark's default
+  * `FALLBACK` above it, where compiled code wins. The cut is
+  * [[CrawlDriver.InterpretBelowSeen]], a measured constant rather than a
+  * [[CrawlConfig]] field, so it never enters `config_hash`; the constructor
+  * parameter exists so specs can force either side.
   */
-final class CrawlDriver(spark: SparkSession, cfg: CrawlConfig, val workDir: String,
-                        extractor: Option[graft.operators.LinkExtractor] = None) {
+final class CrawlDriver private[graft] (caller: SparkSession, cfg: CrawlConfig,
+                                        val workDir: String,
+                                        extractor: Option[graft.operators.LinkExtractor],
+                                        interpretBelowSeen: Long) {
+  def this(spark: SparkSession, cfg: CrawlConfig, workDir: String,
+           extractor: Option[graft.operators.LinkExtractor] = None) =
+    this(spark, cfg, workDir, extractor, CrawlDriver.InterpretBelowSeen)
+
+  /** Every Dataset the driver builds, and every accessor it returns,
+    * belongs to this session. */
+  private val spark: SparkSession = CrawlDriver.ownSession(caller)
   private val io = new TableIO(workDir, spark)
   private val web = new SynthWeb(cfg)
   private val linkEx = extractor.getOrElse(new graft.operators.SyntheticLinkExtractor(web))
@@ -152,18 +178,37 @@ final class CrawlDriver(spark: SparkSession, cfg: CrawlConfig, val workDir: Stri
   }
 
   /** Run (or resume) the crawl. Returns per-round metrics. Seeds are a
-    * DataFrame with one `url` column (≙ S1: spark.read.textFile(seeds)).
-    * On return this JVM's cached prefilter buckets are released; the
-    * durable bucket files stay for a resume. */
+    * DataFrame with one `url` column (≙ S1: spark.read.textFile(seeds)),
+    * from any session of this SparkContext; they are read only on a fresh
+    * workDir. On return this JVM's cached prefilter buckets are released;
+    * the durable bucket files stay for a resume. */
   def run(seedUrls: DataFrame, maxRounds: Int, maxUrls: Long): Seq[RoundMetrics] =
     try runRounds(seedUrls, maxRounds, maxUrls)
     finally prefilterStore.release()
 
+  /** Interpreted evaluation below the size cut, compiled code above it.
+    * The conf is read when a job is planned, and the commit-lane jobs of
+    * the previous round may be planning while it flips: both modes give
+    * identical rows, so such a job is only slower or faster, never
+    * different. */
+  private def gateCodegen(seenTotal: Long): Unit =
+    spark.conf.set("spark.sql.codegen.factoryMode",
+      if (seenTotal < interpretBelowSeen) "NO_CODEGEN" else "FALLBACK")
+
+  /** The seen total a committed round recorded: `seen_total` from a round's
+    * manifest, the seen snapshot's `seen` count from the bootstrap's. */
+  private def committedSeen(round: Int): Option[Long] = {
+    val c = countsOf(round)
+    c.get("seen_total").orElse(c.get("seen"))
+  }
+
   private def runRounds(seedUrls: DataFrame, maxRounds: Int, maxUrls: Long): Seq[RoundMetrics] = {
     // the loop thread's own actions ARE the critical path (inert under FIFO)
     spark.sparkContext.setLocalProperty("spark.scheduler.pool", "critical")
+    val resumeFrom = io.latestRound()
+    gateCodegen(resumeFrom.flatMap(committedSeen).getOrElse(0L))
     val corpus = corpusWithIdx()
-    val startRound = io.latestRound() match {
+    val startRound = resumeFrom match {
       case Some(r) =>
         // resume guard: committed state was produced under exactly one config;
         // continuing with a different one (seed, host counts, delays, bucket
@@ -177,7 +222,8 @@ final class CrawlDriver(spark: SparkSession, cfg: CrawlConfig, val workDir: Stri
             "use a fresh workDir (or the original CrawlConfig) to preserve determinism")
         r
       case None =>
-        val st = CrawlRound.bootstrap(spark, web, cfg, seedUrls)
+        val seeds = spark.createDataFrame(seedUrls.rdd, seedUrls.schema)
+        val st = CrawlRound.bootstrap(spark, web, cfg, seeds)
         val cF = {
           io.writeBucketed("frontier", 0, withFrontierBucket(st.frontier),
             "fb", cfg.numBuckets)
@@ -193,8 +239,8 @@ final class CrawlDriver(spark: SparkSession, cfg: CrawlConfig, val workDir: Stri
         0
     }
     var totalPages = countsOf(startRound).getOrElse("pages_total", 0L)
-    var seenTotal = countsOf(startRound).getOrElse("seen_total",
-      io.readDeltas("seen", startRound).count())
+    var seenTotal = committedSeen(startRound)
+      .getOrElse(io.readDeltas("seen", startRound).count())
     val metrics = scala.collection.mutable.ArrayBuffer.empty[RoundMetrics]
     var r = startRound
     var state = loadState(startRound)
@@ -229,7 +275,9 @@ final class CrawlDriver(spark: SparkSession, cfg: CrawlConfig, val workDir: Stri
     def stopRequested(): Boolean =
       java.nio.file.Files.exists(java.nio.file.Paths.get(workDir, "STOP"))
     while (r < startRound + maxRounds && !stop && !stopRequested()) {
+      gateCodegen(seenTotal)
       val t0 = System.nanoTime()
+      val classes0 = CrawlDriver.compiledClasses()
       var tPrev = t0
       def phase(name: String): Unit = if (profilePhases) {
         val now = System.nanoTime()
@@ -296,7 +344,8 @@ final class CrawlDriver(spark: SparkSession, cfg: CrawlConfig, val workDir: Stri
 
       val m = RoundMetrics(round, round.toLong * cfg.roundTickMs, dequeuedCnt,
         cP, fetchErrors, linksExtracted, cSeenDelta, hostsActive, hostsNew,
-        hostsPurged, (System.nanoTime() - t0) / 1000000L)
+        hostsPurged, (System.nanoTime() - t0) / 1000000L,
+        codegen_classes = CrawlDriver.compiledClasses() - classes0)
       metrics += m
 
       // wait out the previous round's commit (manifests are ordered), then
@@ -362,15 +411,19 @@ final class CrawlDriver(spark: SparkSession, cfg: CrawlConfig, val workDir: Stri
       if (totalPages >= maxUrls || cF == 0) stop = true
       r = round
     }
-    // Drain the last round's still-flushing commit and CHARGE it to that
-    // round's wall: every middle round already internalizes its
-    // predecessor's commit via the in-loop backpressure await, so folding
-    // the final drain here makes the sum of round walls cover ALL work —
-    // without it a short benchmark run could ride an unsustainable commit
-    // backlog and overstate throughput (observed under FAIR pools: 2-core
-    // "rounds" of 51s whose payload writes had simply slid past the end of
-    // the measured window). The metrics TABLE keeps the in-loop wall; only
-    // the returned telemetry carries the drain.
+    // A round's wall_ms runs from the top of its loop iteration to its
+    // metrics stamp: the prefilter-insert and eligibility waits, the
+    // round's jobs and its state checkpoints. What follows the stamp is in
+    // no round's wall: the await of the previous round's commit and, on an
+    // anchor round, the wait for its own commit, the compaction and the
+    // state reload. Commit writes that overlap the next round show only as
+    // contention there. The drain below adds what is still flushing when
+    // the loop ends to the last round's returned wall, so a short run
+    // cannot ride a commit backlog that slid past its window (observed
+    // under FAIR pools: 2-core "rounds" of 51s whose payload writes were
+    // simply not waited for). After an anchor round the commit was already
+    // awaited, so the drain is ~0. The metrics TABLE keeps the in-loop
+    // wall; only the returned telemetry carries the drain.
     val tDrain0 = System.nanoTime()
     Await.result(pendingCommit, Duration.Inf)
     val drainMs = (System.nanoTime() - tDrain0) / 1000000L
@@ -395,6 +448,28 @@ final class CrawlDriver(spark: SparkSession, cfg: CrawlConfig, val workDir: Stri
 }
 
 object CrawlDriver {
+  /** The size cut, in committed seen URLs: below it the driver's plans run
+    * interpreted. Set from a size sweep of the perfbench crawl on 4 cores
+    * (BENCH.md, "Interpreted rounds below a size cut"): interpreted rounds
+    * still won on throughput and CPU at 8,000 hosts, whose measured round
+    * starts at 512,000 seen URLs; no larger size was measured in both
+    * modes. */
+  private[graft] val InterpretBelowSeen: Long = 1L << 19
+
+  /** A new session of `caller`'s SparkContext carrying every modifiable
+    * runtime SQL setting of `caller` (static ones are shared already). */
+  private def ownSession(caller: SparkSession): SparkSession = {
+    val s = caller.newSession()
+    caller.conf.getAll.foreach { case (k, v) =>
+      if (caller.conf.isModifiable(k)) s.conf.set(k, v)
+    }
+    s
+  }
+
+  /** Janino compilations so far in this JVM (Spark's codegen metric). */
+  private def compiledClasses(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** FAIR-scheduler pool config for the round loop's two lanes (see
     * [[CrawlDriver.inPool]]): critical-path jobs outweigh commit-lane jobs
     * so next-round state never queues behind a payload write. Weight and

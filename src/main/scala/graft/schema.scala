@@ -80,7 +80,11 @@ final case class PageRow(
     verify_ok: Option[Boolean], // sampled decode/PSNR/caption check (null = unsampled)
     phash_dup: Boolean)         // content near-dup under the phash index
 
-/** Per-round metrics row (≙ stats channel, `stats.clj:12-36`). */
+/** Per-round metrics row (≙ stats channel, `stats.clj:12-36`).
+  * `wall_ms` runs from the round's start to its metrics stamp, before its
+  * commit (see the drain note in `CrawlDriver.runRounds`);
+  * `codegen_classes` is the number of Janino compilations in this JVM over
+  * that window. */
 final case class RoundMetrics(
     round: Int,
     round_ts: Long,
@@ -92,7 +96,8 @@ final case class RoundMetrics(
     hosts_active: Long,
     hosts_new: Long,
     hosts_purged: Long,
-    wall_ms: Long)
+    wall_ms: Long,
+    codegen_classes: Long = 0L)
 
 /** Engine configuration (≙ startup+runtime config,
   * `runtime_configuration.clj:23-47`, `resources/default-config.edn`). */

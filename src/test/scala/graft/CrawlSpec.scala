@@ -446,4 +446,61 @@ class CrawlSpec extends AnyFunSuite {
     val m = resumed.run(web.seeds(4), maxRounds = 10, maxUrls = Long.MaxValue)
     assert(m.isEmpty && resumed.latestRound().get == 2, "STOP file ignored")
   }
+
+  /** Every row of `df` as JSON (binary columns base64), sorted: equal
+    * results mean bit-identical tables. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select(to_json(struct(df.columns.sorted.map(col).toIndexedSeq: _*)))
+      .collect().map(_.getString(0)).toSeq.sorted
+
+  private def tablesAt(d: CrawlDriver, r: Int): Seq[Seq[String]] =
+    Seq(d.seen(r), d.pages(r), d.frontier(r), d.hostState(r)).map(rowsOf)
+
+  // the same 3-round crawl forced below and above the codegen size cut
+  private lazy val belowAndAbove = {
+    val web = new SynthWeb(cfg)
+    def crawl(interpretBelowSeen: Long) = {
+      val d = new CrawlDriver(spark, cfg, freshDir(), None, interpretBelowSeen)
+      val m = d.run(web.seeds(6), maxRounds = 3, maxUrls = Long.MaxValue)
+      (d, m)
+    }
+    (crawl(Long.MaxValue), crawl(0L))
+  }
+
+  test("codegen size cut: interpreted and compiled rounds give bit-identical tables") {
+    val web = new SynthWeb(cfg)
+    val ((below, mBelow), (above, mAbove)) = belowAndAbove
+    assert(mBelow.size == 3 && mBelow.map(_.dequeued) == mAbove.map(_.dequeued))
+    val want = tablesAt(below, 3)
+    assert(want.forall(_.nonEmpty), "a compared table is empty — test shape broken")
+    assert(tablesAt(above, 3) == want, "compiled rounds differ from interpreted ones")
+    // a crawl whose cut falls between rounds 1 and 2, stopped after round 1
+    // and resumed: round 1 runs interpreted, rounds 2-3 compiled
+    val cut = mBelow.head.links_admitted + below.seen(0).count()
+    val dir = freshDir()
+    new CrawlDriver(spark, cfg, dir, None, cut).run(web.seeds(6), maxRounds = 1, Long.MaxValue)
+    val resumed = new CrawlDriver(spark, cfg, dir, None, cut)
+    val mCross = resumed.run(web.seeds(6), maxRounds = 2, maxUrls = Long.MaxValue)
+    assert(mCross.map(_.round) == Seq(2, 3))
+    assert(tablesAt(resumed, 3) == want, "a resume across the cut changed the tables")
+  }
+
+  test("codegen size cut: a round below it compiles at most 5 classes") {
+    val ((_, mBelow), (_, mAbove)) = belowAndAbove
+    mBelow.foreach { m =>
+      assert(m.codegen_classes <= 5,
+        s"round ${m.round} compiled ${m.codegen_classes} classes below the cut")
+    }
+    // the counter is live: the same rounds above the cut compile code
+    assert(mAbove.map(_.codegen_classes).sum > 20,
+      s"compiled rounds report ${mAbove.map(_.codegen_classes)} classes")
+  }
+
+  test("the driver runs on its own session: the caller's conf is untouched") {
+    val before = spark.conf.getAll
+    val d = new CrawlDriver(spark, cfg, freshDir())
+    d.run(new SynthWeb(cfg).seeds(4), maxRounds = 1, maxUrls = Long.MaxValue)
+    assert(spark.conf.getAll == before)
+    assert(!d.seen(1).sparkSession.eq(spark), "accessors left the driver's session")
+  }
 }
