@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   *
   * Everything here is built-in Catalyst expressions: status simulation via
   * `xxhash64`, payload lookup via an equi-join on the corpus index. The
-  * crawl driver's session runs them interpreted while the crawl is small
-  * and compiled above its size cut (see [[graft.plans.CrawlDriver]]); both
-  * give the same rows. The corpus side is broadcast when small; at 100 TB
+  * crawl driver's session runs them interpreted unless its caller chose
+  * compiled code (see [[graft.plans.CrawlDriver]]); both give the same
+  * rows. The corpus side is broadcast when small; at 100 TB
   * corpus scale the same plan degrades gracefully to a shuffle join on
   * `pick`, which AQE can re-plan.
   */

@@ -24,31 +24,23 @@ import scala.concurrent.ExecutionContext.Implicits.global
   * (committed state, round index, config). Every K rounds the in-memory
   * state re-anchors to the committed Parquet (bounds plan depth and memory).
   *
-  * Own session, interpreted below a size cut: the driver runs every plan on
+  * Own session, interpreted: the driver runs every plan on
   * `spark.newSession()`, which starts from a copy of the caller's modifiable
   * SQL settings (shuffle partitions, AQE, time zone); the caller's conf is
   * never touched. A round is ~80 short jobs whose plans bake round-varying
   * literals (round index, tick, keep-alive batch), so with code generation
   * on it compiles ~160-210 fresh Janino classes every round, on the thread
-  * that plans each job — compile time a small round never earns back
-  * (Kohn, Leis & Neumann, "Adaptive Execution of Compiled Queries", ICDE
-  * 2018). Before the bootstrap and before each round the driver therefore
-  * sets `spark.sql.codegen.factoryMode` on its session: `NO_CODEGEN` while
-  * the committed seen total (which bounds the frontier and every state
-  * table a round reads) is below `interpretBelowSeen`, Spark's default
-  * `FALLBACK` above it, where compiled code wins. The cut is
-  * [[CrawlDriver.InterpretBelowSeen]], a measured constant rather than a
-  * [[CrawlConfig]] field, so it never enters `config_hash`; the constructor
-  * parameter exists so specs can force either side.
+  * that plans each job — compile time these rounds never earn back (Kohn,
+  * Leis & Neumann, "Adaptive Execution of Compiled Queries", ICDE 2018).
+  * The session therefore sets `spark.sql.codegen.factoryMode=NO_CODEGEN`,
+  * unless the caller set that key itself, in which case the caller's value
+  * is carried over like any other setting. Interpreted and compiled plans
+  * give identical rows, so the choice changes how fast a round runs, never
+  * what it commits. No crawl size at which compiled rounds win has been
+  * measured (BENCH.md, "Interpreted crawl rounds").
   */
-final class CrawlDriver private[graft] (caller: SparkSession, cfg: CrawlConfig,
-                                        val workDir: String,
-                                        extractor: Option[graft.operators.LinkExtractor],
-                                        interpretBelowSeen: Long) {
-  def this(spark: SparkSession, cfg: CrawlConfig, workDir: String,
-           extractor: Option[graft.operators.LinkExtractor] = None) =
-    this(spark, cfg, workDir, extractor, CrawlDriver.InterpretBelowSeen)
-
+final class CrawlDriver(caller: SparkSession, cfg: CrawlConfig, val workDir: String,
+                        extractor: Option[graft.operators.LinkExtractor] = None) {
   /** Every Dataset the driver builds, and every accessor it returns,
     * belongs to this session. */
   private val spark: SparkSession = CrawlDriver.ownSession(caller)
@@ -186,29 +178,11 @@ final class CrawlDriver private[graft] (caller: SparkSession, cfg: CrawlConfig,
     try runRounds(seedUrls, maxRounds, maxUrls)
     finally prefilterStore.release()
 
-  /** Interpreted evaluation below the size cut, compiled code above it.
-    * The conf is read when a job is planned, and the commit-lane jobs of
-    * the previous round may be planning while it flips: both modes give
-    * identical rows, so such a job is only slower or faster, never
-    * different. */
-  private def gateCodegen(seenTotal: Long): Unit =
-    spark.conf.set("spark.sql.codegen.factoryMode",
-      if (seenTotal < interpretBelowSeen) "NO_CODEGEN" else "FALLBACK")
-
-  /** The seen total a committed round recorded: `seen_total` from a round's
-    * manifest, the seen snapshot's `seen` count from the bootstrap's. */
-  private def committedSeen(round: Int): Option[Long] = {
-    val c = countsOf(round)
-    c.get("seen_total").orElse(c.get("seen"))
-  }
-
   private def runRounds(seedUrls: DataFrame, maxRounds: Int, maxUrls: Long): Seq[RoundMetrics] = {
     // the loop thread's own actions ARE the critical path (inert under FIFO)
     spark.sparkContext.setLocalProperty("spark.scheduler.pool", "critical")
-    val resumeFrom = io.latestRound()
-    gateCodegen(resumeFrom.flatMap(committedSeen).getOrElse(0L))
     val corpus = corpusWithIdx()
-    val startRound = resumeFrom match {
+    val startRound = io.latestRound() match {
       case Some(r) =>
         // resume guard: committed state was produced under exactly one config;
         // continuing with a different one (seed, host counts, delays, bucket
@@ -239,8 +213,8 @@ final class CrawlDriver private[graft] (caller: SparkSession, cfg: CrawlConfig,
         0
     }
     var totalPages = countsOf(startRound).getOrElse("pages_total", 0L)
-    var seenTotal = committedSeen(startRound)
-      .getOrElse(io.readDeltas("seen", startRound).count())
+    var seenTotal = countsOf(startRound).getOrElse("seen_total",
+      io.readDeltas("seen", startRound).count())
     val metrics = scala.collection.mutable.ArrayBuffer.empty[RoundMetrics]
     var r = startRound
     var state = loadState(startRound)
@@ -275,7 +249,6 @@ final class CrawlDriver private[graft] (caller: SparkSession, cfg: CrawlConfig,
     def stopRequested(): Boolean =
       java.nio.file.Files.exists(java.nio.file.Paths.get(workDir, "STOP"))
     while (r < startRound + maxRounds && !stop && !stopRequested()) {
-      gateCodegen(seenTotal)
       val t0 = System.nanoTime()
       val classes0 = CrawlDriver.compiledClasses()
       var tPrev = t0
@@ -448,18 +421,12 @@ final class CrawlDriver private[graft] (caller: SparkSession, cfg: CrawlConfig,
 }
 
 object CrawlDriver {
-  /** The size cut, in committed seen URLs: below it the driver's plans run
-    * interpreted. Set from a size sweep of the perfbench crawl on 4 cores
-    * (BENCH.md, "Interpreted rounds below a size cut"): interpreted rounds
-    * still won on throughput and CPU at 8,000 hosts, whose measured round
-    * starts at 512,000 seen URLs; no larger size was measured in both
-    * modes. */
-  private[graft] val InterpretBelowSeen: Long = 1L << 19
-
   /** A new session of `caller`'s SparkContext carrying every modifiable
-    * runtime SQL setting of `caller` (static ones are shared already). */
-  private def ownSession(caller: SparkSession): SparkSession = {
+    * runtime SQL setting of `caller` (static ones are shared already),
+    * interpreted unless `caller` chose a codegen factory mode itself. */
+  private[graft] def ownSession(caller: SparkSession): SparkSession = {
     val s = caller.newSession()
+    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     caller.conf.getAll.foreach { case (k, v) =>
       if (caller.conf.isModifiable(k)) s.conf.set(k, v)
     }

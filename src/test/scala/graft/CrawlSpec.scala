@@ -456,44 +456,37 @@ class CrawlSpec extends AnyFunSuite {
   private def tablesAt(d: CrawlDriver, r: Int): Seq[Seq[String]] =
     Seq(d.seen(r), d.pages(r), d.frontier(r), d.hostState(r)).map(rowsOf)
 
-  // the same 3-round crawl forced below and above the codegen size cut
-  private lazy val belowAndAbove = {
+  // the same 3-round crawl run interpreted (the driver's default) and
+  // compiled (a caller session that chose Spark's default factory mode)
+  private lazy val interpretedAndCompiled = {
     val web = new SynthWeb(cfg)
-    def crawl(interpretBelowSeen: Long) = {
-      val d = new CrawlDriver(spark, cfg, freshDir(), None, interpretBelowSeen)
+    val compiled = CrawlDriver.ownSession(spark)
+    compiled.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    def crawl(caller: org.apache.spark.sql.SparkSession) = {
+      val d = new CrawlDriver(caller, cfg, freshDir())
       val m = d.run(web.seeds(6), maxRounds = 3, maxUrls = Long.MaxValue)
       (d, m)
     }
-    (crawl(Long.MaxValue), crawl(0L))
+    (crawl(spark), crawl(compiled))
   }
 
-  test("codegen size cut: interpreted and compiled rounds give bit-identical tables") {
-    val web = new SynthWeb(cfg)
-    val ((below, mBelow), (above, mAbove)) = belowAndAbove
-    assert(mBelow.size == 3 && mBelow.map(_.dequeued) == mAbove.map(_.dequeued))
-    val want = tablesAt(below, 3)
+  test("interpreted rounds: bit-identical tables to compiled rounds") {
+    val ((interp, mInterp), (comp, mComp)) = interpretedAndCompiled
+    assert(mInterp.size == 3 && mInterp.map(_.dequeued) == mComp.map(_.dequeued))
+    val want = tablesAt(comp, 3)
     assert(want.forall(_.nonEmpty), "a compared table is empty — test shape broken")
-    assert(tablesAt(above, 3) == want, "compiled rounds differ from interpreted ones")
-    // a crawl whose cut falls between rounds 1 and 2, stopped after round 1
-    // and resumed: round 1 runs interpreted, rounds 2-3 compiled
-    val cut = mBelow.head.links_admitted + below.seen(0).count()
-    val dir = freshDir()
-    new CrawlDriver(spark, cfg, dir, None, cut).run(web.seeds(6), maxRounds = 1, Long.MaxValue)
-    val resumed = new CrawlDriver(spark, cfg, dir, None, cut)
-    val mCross = resumed.run(web.seeds(6), maxRounds = 2, maxUrls = Long.MaxValue)
-    assert(mCross.map(_.round) == Seq(2, 3))
-    assert(tablesAt(resumed, 3) == want, "a resume across the cut changed the tables")
+    assert(tablesAt(interp, 3) == want, "interpreted rounds differ from compiled ones")
   }
 
-  test("codegen size cut: a round below it compiles at most 5 classes") {
-    val ((_, mBelow), (_, mAbove)) = belowAndAbove
-    mBelow.foreach { m =>
+  test("interpreted rounds: each compiles at most 5 classes") {
+    val ((_, mInterp), (_, mComp)) = interpretedAndCompiled
+    mInterp.foreach { m =>
       assert(m.codegen_classes <= 5,
-        s"round ${m.round} compiled ${m.codegen_classes} classes below the cut")
+        s"round ${m.round} compiled ${m.codegen_classes} classes interpreted")
     }
-    // the counter is live: the same rounds above the cut compile code
-    assert(mAbove.map(_.codegen_classes).sum > 20,
-      s"compiled rounds report ${mAbove.map(_.codegen_classes)} classes")
+    // the counter is live: the same rounds compiled report their classes
+    assert(mComp.forall(_.codegen_classes > 20),
+      s"compiled rounds report ${mComp.map(_.codegen_classes)} classes")
   }
 
   test("the driver runs on its own session: the caller's conf is untouched") {
@@ -501,6 +494,8 @@ class CrawlSpec extends AnyFunSuite {
     val d = new CrawlDriver(spark, cfg, freshDir())
     d.run(new SynthWeb(cfg).seeds(4), maxRounds = 1, maxUrls = Long.MaxValue)
     assert(spark.conf.getAll == before)
-    assert(!d.seen(1).sparkSession.eq(spark), "accessors left the driver's session")
+    val own = d.seen(1).sparkSession
+    assert(!own.eq(spark), "accessors left the driver's session")
+    assert(own.conf.get("spark.sql.codegen.factoryMode") == "NO_CODEGEN")
   }
 }
